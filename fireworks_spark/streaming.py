@@ -791,10 +791,9 @@ def maintain_rollup_table(
     raise to 2+ to give readers one full merge interval of grace, the
     standard snapshot-retention trade (Iceberg's expire_snapshots).
     """
-    import os
     import shutil
-    import uuid
 
+    from fireworks_spark import publish
     from fireworks_spark.database import upsert_rows
 
     if commit_protocol not in ("rename", "manifest"):
@@ -838,32 +837,12 @@ def maintain_rollup_table(
             merged = upsert_rows(cur, batch, "_mk").drop("_mk")
         else:
             merged = batch.drop("_mk")
-        if commit_protocol == "manifest":
-            import glob as _glob
-
-            from fireworks_spark import publish
-
-            gen, data_dir = publish.new_generation(table_path)
-            try:
-                merged.write.mode("overwrite").parquet(data_dir)
-            except BaseException:
-                shutil.rmtree(data_dir, ignore_errors=True)
-                raise
-            publish.commit_generation(
-                table_path,
-                gen,
-                data_dir,
-                sorted(_glob.glob(os.path.join(data_dir, "*.parquet"))),
-                keep=keep_generations,
-            )
-            return
-        tmp = f"{table_path}.tmp-{uuid.uuid4().hex[:8]}"
-        merged.write.mode("overwrite").parquet(tmp)
-        old = f"{table_path}.old-{uuid.uuid4().hex[:8]}"
-        if os.path.exists(table_path):
-            os.rename(table_path, old)
-        os.rename(tmp, table_path)
-        shutil.rmtree(old, ignore_errors=True)
+        publish.staged_publish(
+            table_path,
+            lambda stage: merged.write.mode("overwrite").parquet(stage),
+            commit_protocol,
+            keep_generations,
+        )
 
     ck = scratch_dir("fw_ck_")
     try:

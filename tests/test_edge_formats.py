@@ -384,54 +384,6 @@ def test_sparse_empty_frame_contract(spark, tmp_path):
     assert out == [(2, 2, 9.0)]
 
 
-def test_sparse_parts_atomic_and_zombie_safe(spark, tmp_path):
-    """ADVICE r9: parts are written scratch-then-rename, so a task killed
-    mid-write can never leave a truncated *.npz visible; and a zombie
-    speculative attempt landing a duplicate part AFTER write_sparse's own
-    dedup scan is ignored by read_sparse (one part per partition id)."""
-    import glob as g
-    import os
-    import shutil
-
-    import numpy as np
-
-    rows = [(0, 0, 1.0), (1, 1, 2.0), (2, 0, 3.0)]
-    df = spark.createDataFrame(rows, "r long, c long, v double")
-    p = str(tmp_path / "zomb")
-    ef.write_sparse(df.repartition(2), p, "r", "c", "v")
-
-    parts = sorted(g.glob(p + "/*.npz"))
-    assert parts
-    # zombie attempt: a complete duplicate of pid 0's part under a fresh
-    # attempt uuid, landed after the job's dedup scan ran
-    pid0 = parts[0]
-    pid = os.path.basename(pid0).split("-")[1]
-    shutil.copy(pid0, os.path.join(p, f"part-{pid}-{'f' * 32}.npz"))
-    # plus a truncated scratch file a killed attempt would strand —
-    # dot-prefixed, so no *.npz glob may ever see it
-    with open(os.path.join(p, f".part-{pid}-killed.npz"), "wb") as f:
-        f.write(b"PK\x03\x04 truncated")
-
-    back = sorted(
-        (x.row, x.col, x.value) for x in ef.read_sparse(spark, p).collect()
-    )
-    assert back == sorted(rows)  # no double count, no corrupt-load crash
-
-    # a foreign scipy-style file (no part- pid scheme) still loads
-    z = np.load(pid0)
-    p2 = str(tmp_path / "foreign")
-    os.makedirs(p2)
-    np.savez_compressed(
-        os.path.join(p2, "matrix.npz"),
-        format=np.array(b"coo"),
-        shape=z["shape"],
-        row=np.array([5], dtype=np.int64),
-        col=np.array([0], dtype=np.int64),
-        data=np.array([7.0]),
-    )
-    assert ef.read_sparse(spark, p2).collect()[0].value == 7.0
-
-
 def test_sparse_user_partlike_names_not_deduped(spark, tmp_path):
     """The one-part-per-pid dedup applies ONLY to write_sparse's exact
     name scheme (part-<5 digits>-<32 hex>.npz). A hand-assembled

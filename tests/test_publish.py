@@ -288,36 +288,30 @@ def test_savez_part_direct_mode_rename_free(monkeypatch, tmp_path):
     truncation guard) — proven here at unit level with rename raising,
     since a Spark worker subprocess is outside monkeypatch's reach."""
     import numpy as np
+    import pandas as pd
 
     from fireworks_spark import edge_formats as ef
 
+    def serialize(pid, batches, new_part):
+        pdf = pd.concat(list(batches))
+        ef._savez_coo_part(
+            new_part(), 4, 4, pdf["r"].to_numpy(), pdf["c"].to_numpy(),
+            pdf["v"].to_numpy(),
+        )
+
+    batch = pd.DataFrame({"r": [1], "c": [2], "v": [3.0]})
+    d = str(tmp_path)
     _forbid_renames(monkeypatch)
-    f = ef._savez_coo_part(
-        str(tmp_path),
-        "part-00000-abc.npz",
-        4,
-        4,
-        np.array([1], dtype=np.int64),
-        np.array([2], dtype=np.int64),
-        np.array([3.0]),
-        direct=True,
-    )
+    n = publish.run_attempt(d, "npz", serialize, True, 0, "a" * 32, [batch])
+    assert n == 1
+    f = os.path.join(d, f"part-00000-{'a' * 32}.npz")
     with np.load(f) as z:
         assert z["row"].tolist() == [1] and z["data"].tolist() == [3.0]
     # and the posix mode still uses the scratch+rename guard
     monkeypatch.undo()
-    f2 = ef._savez_coo_part(
-        str(tmp_path),
-        "part-00001-abc.npz",
-        4,
-        4,
-        np.array([1], dtype=np.int64),
-        np.array([2], dtype=np.int64),
-        np.array([3.0]),
-        direct=False,
-    )
-    assert os.path.exists(f2)
-    assert not os.path.exists(os.path.join(str(tmp_path), ".part-00001-abc.npz"))
+    publish.run_attempt(d, "npz", serialize, False, 1, "b" * 32, [batch])
+    assert os.path.exists(os.path.join(d, f"part-00001-{'b' * 32}.npz"))
+    assert [n for n in os.listdir(d) if n.startswith(".")] == []
 
 
 def test_write_sparse_object_store_roundtrip(monkeypatch, spark, tmp_path):
