@@ -66,12 +66,11 @@ def _attach_caches(out: DataFrame, *sources: DataFrame, extra=()) -> DataFrame:
 
 
 #: Projected pairwise-comparison budget above which the quadratic-by-
-#: contract paths (blocked Hamming popcount, blocked cosine gram, exact
-#: Jaccard verify) warn at runtime and name their sub-quadratic
-#: alternative. 5e9 comparisons ~ minutes of BLAS/popcount on one node,
-#: hours of join fan-out for the Jaccard verify — the point past which a
-#: user who reached the exact path by default almost certainly wants the
-#: LSH path instead. Tests may lower it to exercise the warning.
+#: contract paths (blocked Hamming popcount, blocked cosine gram) warn at
+#: runtime and name their sub-quadratic alternative. 5e9 comparisons ~
+#: minutes of BLAS/popcount on one node — the point past which a user who
+#: reached the exact path by default almost certainly wants the LSH path
+#: instead. Tests may lower it to exercise the warning.
 QUADRATIC_COMPARE_BUDGET: int = 5_000_000_000
 
 
@@ -191,93 +190,6 @@ def shingle_sets(
     return _hashed_shingles(df, id_col, text_col, n)
 
 
-def shingle_candidates(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    df_cap: int | None = None,
-) -> DataFrame:
-    """Candidate pairs (ida < idb) sharing at least one shingle.
-
-    ``df_cap`` drops shingles appearing in more than df_cap documents from
-    candidate GENERATION only (verification still uses every shingle, so the
-    Jaccard values stay exact). A shingle shared by f documents produces
-    O(f^2) join rows; uncapped, one boilerplate shingle at corpus scale makes
-    the self-join quadratic in its document frequency. Capped, each join
-    group is at most df_cap^2 rows — skew-proof at any scale. A true pair is
-    missed only if EVERY shared shingle is hotter than the cap (i.e. the two
-    documents overlap exclusively in corpus-wide boilerplate, which carries
-    no dedup signal anyway).
-    """
-    sets = shingle_sets(df, id_col, text_col, n).persist()
-    cand, _, caches = _candidate_stats(sets, id_col, df_cap)
-    return _attach_caches(cand.select("ida", "idb"), extra=[sets] + caches)
-
-
-def _candidate_stats(
-    sets: DataFrame,
-    id_col: str,
-    df_cap: int | None,
-) -> tuple[DataFrame, DataFrame]:
-    """Internal: candidate pairs WITH their cold-shingle co-occurrence count,
-    plus per-document (size, hot-shingle count) stats, all derived from an
-    (ideally persisted) shingle_sets frame so the tokenize+hash pipeline
-    runs ONCE — the branching DAG here (candidates / sizes / hot counts /
-    verify) would otherwise re-tokenize the corpus once per branch, which
-    measured 5x slower than the persisted working set at sf0.1.
-
-    Returns (cand, stats, caches) where cand = (ida, idb, _common) —
-    caches lists the frames persisted here (the hot-shingle table) for the
-    caller to attach to its release handle; _common is the
-    number of shared shingles NOT dropped by df_cap (an exact lower bound on
-    |A ∩ B|) — and stats = (_id, _sz, _hot) with _sz the full distinct
-    shingle count and _hot how many of those exceeded df_cap. The pair count
-    comes from the same groupBy that deduplication needed anyway, so _common
-    is free; it powers the exact upper bound
-        jac <= (_common + min(hotA, hotB)) / max(szA, szB)
-    that lets jaccard_pairs discard nearly every candidate before any
-    shingle array moves through a shuffle.
-    """
-    sh = sets.select(id_col, F.explode("shingles").alias("shingle"))
-    sizes = sets.select(id_col, F.size("shingles").alias("_sz"))
-    if df_cap is not None:
-        # persisted: consumed by BOTH the hot-count join and the cold
-        # anti-join — unpersisted, the corpus-wide frequency aggregation
-        # runs once per consumer. Handle rides the cand frame.
-        hot = (
-            sh.groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") > df_cap)
-            .select("shingle")
-            .persist()
-        )
-        hotcnt = (
-            sh.join(hot, "shingle").groupBy(id_col).agg(
-                F.count(F.lit(1)).alias("_hot")
-            )
-        )
-        cold = sh.join(hot, "shingle", "left_anti")
-    else:
-        hotcnt = sizes.select(id_col, F.lit(0).alias("_hot")).limit(0)
-        cold = sh
-    stats = sizes.join(hotcnt, id_col, "left").select(
-        F.col(id_col).alias("_id"),
-        "_sz",
-        F.coalesce("_hot", F.lit(0)).alias("_hot"),
-    )
-    a = cold.select(F.col(id_col).alias("ida"), "shingle")
-    b = cold.select(F.col(id_col).alias("idb"), "shingle")
-    cand = (
-        a.join(b, "shingle")
-        .filter(F.col("ida") < F.col("idb"))
-        .groupBy("ida", "idb")
-        .agg(F.count(F.lit(1)).alias("_common"))
-    )
-    caches = [hot] if df_cap is not None else []
-    return cand, stats, caches
-
-
 def _prefix_len(sz: Column, t: float) -> Column:
     """AllPairs prefix length for Jaccard threshold ``t`` on a set of size
     ``sz``: L = sz - ceil(t*sz) + 1. Any pair with J >= t must share an
@@ -307,91 +219,102 @@ def _prefix_k(threshold: float) -> int:
     return 1 if threshold >= 0.7 else 4
 
 
-def _prefix_candidate_stats(
-    sets: DataFrame,
+def _prefix_candidates(
+    sets: tuple,
     id_col: str,
     threshold: float,
     k: int | None = None,
-) -> tuple[DataFrame, DataFrame, list]:
+) -> tuple[DataFrame, tuple, list]:
     """Prefix-filtered candidate pairs: recall-EXACT at any corpus scale.
 
-    This replaces the global ``df_cap`` heuristic as the default candidate
-    generator. The cap was skew-proof but lossy — a true pair whose every
-    shared shingle exceeds the cap is silently missed, and shingle document
-    frequencies grow with corpus size, so a cap tuned at sf0.1 broke at sf1
-    (the round-9 sweep caught q31 under-reporting pairs on the 10x fixture).
-    Prefix filtering bounds the index a different way: each document posts
-    only its first L = |d| - ceil(t'|d|) + 1 shingles under the global
-    (document-frequency ASC, shingle ASC) order — the RAREST shingles — and
-    the AllPairs theorem guarantees every pair with true Jaccard >= t'
-    collides on some posted shingle. t' carries the 0.0005 rounding slack
-    so pairs that round up to the threshold still surface.
+    ``sets`` is ``(corpus,)`` for a self-join (pairs ida < idb within one
+    shingle-set frame) or ``(left, right)`` for a cross-join (ida from
+    left, idb from right). Each document posts only its first
+    L = |d| - ceil(t'|d|) + k shingles under one global (document-
+    frequency ASC, shingle ASC) order — the RAREST shingles — and the
+    AllPairs theorem (see _prefix_len) guarantees every pair with true
+    Jaccard >= t' collides on some posted shingle. t' carries the 0.0005
+    rounding slack so pairs that round up to the threshold still surface.
+    Document frequency is counted over the frames given — one corpus for
+    a self-join (never a frame unioned with itself: that doubles every df
+    and the df=1 drop would prune nothing), both corpora for a cross-join
+    (the theorem only needs ONE consistent order). Shingles of df 1
+    cannot collide, and a SHARED shingle has df >= 2, so dropping them
+    after prefix selection is exact.
 
-    Cost at scale: the posting list is ~(1-t) of all shingle occurrences,
-    biased to df=1 shingles (which are dropped after prefix selection —
-    df=1 cannot collide, and any SHARED shingle has df >= 2, so this is
-    exact). Group size on a posted shingle is bounded by that shingle's
-    global df, which rare-first ordering minimizes; the residual worst case
-    (a corpus of near-identical documents) is Theta(output) — inherent to
-    exact all-pairs, and the reason MinHash-LSH (minhash_dedup_pairs) is
-    the 100 TB path while this stays verification-grade.
+    Cost at scale: group size on a posted shingle is bounded by that
+    shingle's df, which rare-first ordering minimizes; the residual worst
+    case (a corpus of near-identical documents) is Theta(output) —
+    inherent to exact all-pairs, and the reason MinHash-LSH
+    (minhash_dedup_pairs) is the 100 TB path while this stays
+    verification-grade.
 
-    ``k`` (default: _prefix_k(threshold)) is the extended-prefix depth:
-    each document posts its first L = |d| - ceil(t'|d|) + k order-rarest
-    shingles and a pair must share least(k, ceil(t'*min_size)) of them —
+    ``k`` (default: _prefix_k(threshold)) is the extended-prefix depth: a
+    pair must share least(k, ceil(t'*min_size)) posted shingles —
     recall-exact for every k (see _prefix_k), and the low-threshold
     lifesaver: at t=0.5 the k=1 candidates are a flood of
     share-exactly-one-shingle pairs that the verify stage then drowns in.
 
-    Returns (cand, stats, caches): cand = (ida, idb, _common) where
-    _common is the EXACT count of shared shingles inside both documents'
-    extended prefixes — at every k, including k=1, where the PPJoin
-    positional filter runs as a pair-survival test inside the aggregate
-    so it can no longer thin the count (r10 verdict #4); stats =
-    (_id, _sz, _hot) where _hot = max(ceil(t'*_sz) - k, 0) is the
-    per-document count of non-posted shingles, closed-form from the
-    size — no extra aggregation.
-
-    The caller's prune bound |A∩B| <= _common + _hotA + _hotB is EXACT
-    for every k: each shared shingle is either inside both extended
-    prefixes (counted in _common — a shared shingle has df >= 2, so the
-    df=1 drop never loses one) or outside at least one prefix (covered
-    by that document's _hot allowance). The bound may therefore be
+    Returns (cand, (stats_a, stats_b), caches): cand = (ida, idb,
+    _common) where _common is the EXACT count of shared shingles inside
+    both documents' extended prefixes — at every k, including k=1, where
+    the PPJoin positional filter runs as a pair-survival test inside the
+    aggregate so it cannot thin the count (r10 verdict #4); stats =
+    (_id, _sz, _hot) per side, where _hot = max(ceil(t'*_sz) - k, 0) is
+    the closed-form count of non-posted shingles. The bound
+    |A∩B| <= _common + _hotA + _hotB is EXACT for every k: each shared
+    shingle is either inside both prefixes (counted in _common) or
+    outside at least one (covered by that document's _hot), so it may be
     tightened freely; test_prefix_common_counts_all_collisions pins a
-    pair the pre-fix earliest-collision undercount would drop under a
-    tightened allowance.
+    pair an earliest-collision undercount would drop under a tightened
+    allowance. caches lists the frames persisted here.
     """
     t = threshold - 0.0005  # match the verify stage's rounding slack
     if k is None:
         k = _prefix_k(threshold)
-    sh = sets.select(
-        id_col,
-        F.size("shingles").alias("_sz"),
-        F.explode("shingles").alias("shingle"),
-    )
-    dfreq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("_df"))
-    order = Window.partitionBy(id_col).orderBy("_df", "shingle")
-    # persisted: BOTH sides of the candidate self-join scan this frame —
-    # unpersisted, the dfreq join + per-doc ranking window run twice
-    pre = (
-        sh.join(dfreq, "shingle")
-        .withColumn("_rn", F.row_number().over(order))
-        .filter(
-            F.col("_rn") <= _prefix_len(F.col("_sz"), t) + F.lit(k - 1)
+    self_join = len(sets) == 1
+    sh = [
+        s.select(
+            id_col,
+            F.size("shingles").alias("_sz"),
+            F.explode("shingles").alias("shingle"),
         )
+        for s in sets
+    ]
+    shingles = sh[0].select("shingle")
+    if not self_join:
+        shingles = shingles.unionAll(sh[1].select("shingle"))
+    dfreq = shingles.groupBy("shingle").agg(F.count(F.lit(1)).alias("_df"))
+    if not self_join:
+        # persisted: both corpora's prefix selections scan the union-wide
+        # frequency table — unpersisted it aggregates twice
+        dfreq = dfreq.persist()
+        caches = [dfreq]
+    order = Window.partitionBy(id_col).orderBy("_df", "shingle")
+    pre = [
+        s.join(dfreq, "shingle")
+        .withColumn("_rn", F.row_number().over(order))
+        .filter(F.col("_rn") <= _prefix_len(F.col("_sz"), t) + F.lit(k - 1))
         .filter(F.col("_df") >= 2)  # df=1 cannot collide; exact to drop
         .select(id_col, "shingle", "_rn", "_sz")
-        .persist()
-    )
-    a = pre.select(
+        for s in sh
+    ]
+    if self_join:
+        # persisted: BOTH sides of the candidate self-join scan this frame
+        # — unpersisted, the dfreq join + per-doc ranking window run twice
+        pre = caches = [pre[0].persist()]
+    a = pre[0].select(
         F.col(id_col).alias("ida"), "shingle",
         F.col("_rn").alias("_pa"), F.col("_sz").alias("_qa"),
     )
-    b = pre.select(
+    b = pre[-1].select(
         F.col(id_col).alias("idb"), "shingle",
         F.col("_rn").alias("_pb"), F.col("_sz").alias("_qb"),
     )
-    joined = a.join(b, "shingle").filter(F.col("ida") < F.col("idb")).filter(
+    joined = a.join(b, "shingle")
+    if self_join:
+        joined = joined.filter(F.col("ida") < F.col("idb"))
+    joined = joined.filter(
         F.least("_qa", "_qb") >= F.lit(t) * F.greatest("_qa", "_qb")
     )
     if k == 1:
@@ -403,17 +326,7 @@ def _prefix_candidate_stats(
         # lists, so c <= 1 + min(|A|-pa, |B|-pb). A pair with NO row
         # passing that bound cannot reach the threshold (its earliest
         # collision row would have passed), so dropping such pairs loses
-        # nothing. _common deliberately counts ALL collision rows — not
-        # just positional survivors — so it is the EXACT count of shared
-        # shingles inside both prefixes, and the caller's prune bound
-        # |A∩B| <= _common + _hotA + _hotB is exact for every k (each
-        # shared shingle is either inside both prefixes, counted here,
-        # or outside at least one, covered by that document's _hot
-        # allowance; df=1 shingles cannot be shared). Filtering rows
-        # FIRST would undercount _common for true pairs whose later
-        # collisions fail the positional bound — safe only while the
-        # allowance stays loose, and one tightening away from silent
-        # recall loss (r10 verdict #4).
+        # nothing, while _common still counts ALL collision rows.
         alpha = F.lit(t) * (F.col("_qa") + F.col("_qb")) / F.lit(1.0 + t)
         pos_ok = (
             1 + F.least(F.col("_qa") - F.col("_pa"),
@@ -450,14 +363,79 @@ def _prefix_candidate_stats(
             )
             .select("ida", "idb", "_common")
         )
-    stats = sets.select(
-        F.col(id_col).alias("_id"),
-        F.size("shingles").alias("_sz"),
-        F.greatest(
-            F.ceil(F.lit(t) * F.size("shingles")) - k, F.lit(0)
-        ).cast("long").alias("_hot"),
+    stats = [
+        s.select(
+            F.col(id_col).alias("_id"),
+            F.size("shingles").alias("_sz"),
+            F.greatest(
+                F.ceil(F.lit(t) * F.size("shingles")) - k, F.lit(0)
+            ).cast("long").alias("_hot"),
+        )
+        for s in sets
+    ]
+    return cand, (stats[0], stats[-1]), caches
+
+
+def _prune_verify(
+    cand: DataFrame,
+    sets: tuple,
+    id_col: str,
+    threshold: float,
+    stats: tuple | None = None,
+) -> DataFrame:
+    """The one exact-Jaccard rule: (ida, idb, jac) for the candidate pairs
+    ``cand`` (ida from sets[0], idb from sets[-1]) whose word-n-gram
+    Jaccard, rounded to 3 decimals, reaches ``threshold``.
+
+    With ``stats`` (from _prefix_candidates, cand carrying _common) pairs
+    first die on the exact bound jac <= (_common + _hotA + _hotB) /
+    max(|A|,|B|), evaluated on the small per-document stats before any
+    shingle array moves through a shuffle; at dedup thresholds nearly
+    every candidate dies here. Without it (external candidate sets, e.g.
+    MinHash-LSH bands) there are no co-occurrence counts to bound by.
+    The verify then joins each pair to both documents' shingle SETS,
+    applies the exact size bound jac <= min(|A|,|B|) / max(|A|,|B|), and
+    computes |A∩B| with array_intersect over ALL shingles — O(|A|+|B|)
+    per pair, no shingle-keyed join for hot shingles to amplify — so the
+    reported values are exact.
+    """
+    # 0.0005 slack in both bounds: jac is rounded to 3 decimals before the
+    # threshold filter, so true jac >= threshold - 0.0005 can pass
+    thr = F.lit(threshold - 0.0005)
+    if stats is not None:
+        sta = stats[0].select(
+            F.col("_id").alias("ida"), F.col("_sz").alias("_sza"),
+            F.col("_hot").alias("_ha"),
+        )
+        stb = stats[1].select(
+            F.col("_id").alias("idb"), F.col("_sz").alias("_szb"),
+            F.col("_hot").alias("_hb"),
+        )
+        cand = (
+            cand.join(sta, "ida")
+            .join(stb, "idb")
+            .filter(
+                F.col("_common") + F.col("_ha") + F.col("_hb")
+                >= thr * F.greatest("_sza", "_szb")
+            )
+            .select("ida", "idb")
+        )
+    sa = sets[0].select(
+        F.col(id_col).alias("ida"), F.col("shingles").alias("_sa")
     )
-    return cand, stats, [pre]
+    sb = sets[-1].select(
+        F.col(id_col).alias("idb"), F.col("shingles").alias("_sb")
+    )
+    sza, szb = F.size("_sa"), F.size("_sb")
+    inter = F.size(F.array_intersect("_sa", "_sb"))
+    jac = pround(inter / (sza + szb - inter), 3)
+    return (
+        cand.join(sa, "ida")
+        .join(sb, "idb")
+        .filter(F.least(sza, szb) >= thr * F.greatest(sza, szb))
+        .select("ida", "idb", jac.alias("jac"))
+        .filter(F.col("jac") >= threshold)
+    )
 
 
 # --------------------------------------------------------------------------
@@ -494,35 +472,14 @@ def jaccard_pairs(
     text_col: str = "text",
     n: int = 3,
     candidates: DataFrame | None = None,
-    df_cap: int | None = None,
-    size_check: bool = False,
 ) -> DataFrame:
     """Pairs (ida < idb) with word-n-gram Jaccard >= threshold (exact values).
 
-    Two stages:
-    1. candidates — by default an AllPairs prefix-filtered self-equi-join
-       (see _prefix_candidate_stats: recall-exact at ANY corpus scale); or
-       the legacy df-capped join when ``df_cap`` is given (skew-bounded but
-       LOSSY — a pair sharing only hotter-than-cap shingles is missed, and
-       dfs grow with corpus size, so a cap tuned small breaks big); or an
-       external candidate set (e.g. MinHash-LSH) via ``candidates``;
-    2. verify — join each candidate pair to the two documents' shingle SETS
-       and compute |A ∩ B| with array_intersect. Per-pair cost is
-       O(|A| + |B|); hot shingles cannot amplify this stage because there is
-       no shingle-keyed join here at all.
-
-    The verify uses ALL shingles (including any dropped by df_cap during
-    candidate generation), so reported Jaccard values are exact.
-
-    Before the (heavy) set joins, candidates are pruned by two exact bounds
-    (no false negatives):
-    - size ratio: jac <= min(|A|,|B|) / max(|A|,|B|);
-    - intersection: jac <= (_common + allowance) / max(|A|,|B|), where
-      _common (shared counted-shingle count) falls out of the candidate
-      groupBy for free and the allowance is min(hotA,hotB) for the df_cap
-      path / hotA+hotB for the prefix path (see _prefix_candidate_stats).
-    At dedup thresholds nearly every candidate dies here, so the heavy
-    array_intersect verify touches only near-certain pairs.
+    Candidates come from the AllPairs prefix-filtered self-join
+    (_prefix_candidates: recall-exact at ANY corpus scale), or from an
+    external candidate set (e.g. MinHash-LSH) via ``candidates``; every
+    candidate then goes through the one exact-bound prune and
+    array_intersect verify (_prune_verify).
 
     The per-document shingle-set frame is persisted: candidates, stats and
     verify all branch from it, and without materialization each branch
@@ -530,126 +487,18 @@ def jaccard_pairs(
     slower at sf0.1). The frame holds one hashed-long array per document —
     a small fraction of corpus size; MEMORY_AND_DISK eviction makes it safe
     at any scale.
-
-    ``size_check=True`` (prefix path only) runs ONE eager diagnostic
-    aggregation over the posted-prefix frame before returning: projected
-    candidate rows = sum over posted shingles of df*(df-1)/2. If that
-    exceeds dedup.QUADRATIC_COMPARE_BUDGET, a warning names MinHash-LSH
-    (minhash_dedup_pairs) as the sub-quadratic production path — exact
-    all-pairs Jaccard is Theta(output) by contract on near-duplicate-heavy
-    corpora. OPT-IN because it executes a Spark job at plan-construction
-    time (the funnel skew probe's contract, Pipe.funnel).
     """
-    sets = shingle_sets(df, id_col, text_col, n).persist()
-    caches: list = []
-    # allowance for shared shingles the candidate groupBy could not count:
-    # df_cap path -> an uncounted shared shingle is hot in BOTH docs (min);
-    # prefix path -> it is outside at least one doc's prefix (sum).
-    allow = F.least("_ha", "_hb")
+    sets = (shingle_sets(df, id_col, text_col, n).persist(),)
     if candidates is None:
-        if df_cap is None:
-            cand, stats, caches = _prefix_candidate_stats(
-                sets, id_col, threshold
-            )
-            allow = F.col("_ha") + F.col("_hb")
-            if size_check:
-                # caches[0] is the persisted posted-prefix frame (also
-                # consumed by the candidate join below, so this probe's
-                # scan is reused, not wasted). Projected candidate rows:
-                # every posted shingle with prefix-df d contributes
-                # d*(d-1)/2 (ida < idb) join rows.
-                pre = caches[0]
-                proj = int(
-                    pre.groupBy("shingle")
-                    .agg(F.count(F.lit(1)).alias("_d"))
-                    .agg(
-                        F.coalesce(
-                            F.sum(
-                                F.col("_d") * (F.col("_d") - 1) / 2
-                            ),
-                            F.lit(0.0),
-                        ).alias("_p")
-                    )
-                    .collect()[0]["_p"]
-                )
-                if proj > QUADRATIC_COMPARE_BUDGET:
-                    import warnings
-
-                    warnings.warn(
-                        f"jaccard_pairs: prefix filtering projects "
-                        f"{proj:.2e} candidate rows — past the "
-                        f"{QUADRATIC_COMPARE_BUDGET:.0e} budget "
-                        f"(dedup.QUADRATIC_COMPARE_BUDGET). Exact "
-                        "all-pairs Jaccard is Theta(output) by contract "
-                        "on near-duplicate-heavy corpora; route to "
-                        "minhash_dedup_pairs (MinHash-LSH) for the "
-                        "sub-quadratic production path.",
-                        stacklevel=2,
-                    )
-        else:
-            cand, stats, caches = _candidate_stats(sets, id_col, df_cap)
+        cand, stats, caches = _prefix_candidates(sets, id_col, threshold)
     else:
-        cand = candidates.select("ida", "idb").distinct().withColumn(
-            "_common", F.lit(None).cast("long")
-        )
-        stats = sets.select(
-            F.col(id_col).alias("_id"),
-            F.size("shingles").alias("_sz"),
-            F.lit(0).alias("_hot"),
-        )
-    # 0.0005 slack everywhere: jac is rounded to 3 decimals before the
-    # threshold filter, so true jac >= threshold - 0.0005 can pass.
-    thr = F.lit(threshold - 0.0005)
-    cand = (
-        cand.join(
-            stats.select(
-                F.col("_id").alias("ida"),
-                F.col("_sz").alias("_sza"),
-                F.col("_hot").alias("_ha"),
-            ),
-            "ida",
-        )
-        .join(
-            stats.select(
-                F.col("_id").alias("idb"),
-                F.col("_sz").alias("_szb"),
-                F.col("_hot").alias("_hb"),
-            ),
-            "idb",
-        )
-        # exact size bound: jac <= min(|A|,|B|) / max(|A|,|B|)
-        .filter(
-            F.least("_sza", "_szb") >= thr * F.greatest("_sza", "_szb")
-        )
-        # exact intersection bound: |A∩B| <= _common + allowance (min of
-        # hot counts for df_cap, sum of non-posted counts for prefix) and
-        # |A∪B| >= max(|A|,|B|), so jac <= (common+allow)/max — pairs
-        # below threshold on this bound cannot verify; drop them before the
-        # heavy set join. _common is null for externally-supplied candidate
-        # sets (no co-occurrence counts), where the filter passes through.
-        .filter(
-            F.coalesce(
-                (F.col("_common") + allow)
-                >= thr * F.greatest("_sza", "_szb"),
-                F.lit(True),
-            )
-        )
-        .select("ida", "idb")
-    )
-    sa = sets.select(F.col(id_col).alias("ida"), F.col("shingles").alias("_sa"))
-    sb = sets.select(F.col(id_col).alias("idb"), F.col("shingles").alias("_sb"))
-    inter = F.size(F.array_intersect(F.col("_sa"), F.col("_sb")))
-    jac = inter / (F.size("_sa") + F.size("_sb") - inter)
-    out = (
-        cand.join(sa, "ida")
-        .join(sb, "idb")
-        .select("ida", "idb", pround(jac, 3).alias("jac"))
-        .filter(F.col("jac") >= threshold)
-    )
+        cand = candidates.select("ida", "idb").distinct()
+        stats, caches = None, []
+    out = _prune_verify(cand, sets, id_col, threshold, stats)
     return _attach_caches(
         out,
         *([candidates] if candidates is not None else []),
-        extra=[sets] + caches,
+        extra=[*sets, *caches],
     )
 
 
@@ -660,7 +509,6 @@ def jaccard_join(
     id_col: str = "doc_id",
     text_col: str = "text",
     n: int = 3,
-    df_cap: int | None = None,
     candidates: DataFrame | None = None,
 ) -> DataFrame:
     """Cross-corpus similarity JOIN: pairs (lid from ``left``, rid from
@@ -669,201 +517,32 @@ def jaccard_join(
     fuzzily overlap the training corpus" when exact n-gram decontamination
     is too strict.
 
-    Same three-stage shape as the self-join: (1) candidates from an
-    AllPairs prefix-filtered equi-join LEFT x RIGHT by default (one
-    union-wide document-frequency order; recall-exact at any scale — see
-    _prefix_candidate_stats), or the legacy df-capped join when ``df_cap``
-    is given (``df_cap`` counts a shingle's frequency across BOTH corpora,
-    bounding any join group at df_cap^2 rows, but LOSSY for pairs sharing
-    only hotter-than-cap shingles), or an external candidate set
-    (e.g. banded MinHash from :func:`minhash_join`) via ``candidates``;
-    (2) two exact pruning bounds (size ratio; shared-counted + allowance)
-    kill nearly every candidate before data moves; (3)
-    per-pair array_intersect verify over ALL shingles, so reported values
-    are exact. Both shingle-set frames persist (each feeds candidates,
-    stats, and verify) and expose release handles via ``release_caches``.
+    Same candidate generator and verify as the self-join: an AllPairs
+    prefix-filtered equi-join LEFT x RIGHT under one union-wide
+    document-frequency order (_prefix_candidates), or an external
+    candidate set (lid, rid) (e.g. banded MinHash from
+    :func:`minhash_join`) via ``candidates``, then _prune_verify. Both
+    shingle-set frames persist (each feeds candidates, stats, and verify)
+    and expose release handles via ``release_caches``.
     """
-    sl = shingle_sets(left, id_col, text_col, n).persist()
-    sr = shingle_sets(right, id_col, text_col, n).persist()
-    shl = sl.select(F.col(id_col).alias("lid"), F.explode("shingles").alias("shingle"))
-    shr = sr.select(F.col(id_col).alias("rid"), F.explode("shingles").alias("shingle"))
-    allow = F.least("_hl", "_hr")  # df_cap: uncounted shared is hot in BOTH
-    prefix_hot = None
-    prefix_caches: list = []
-    if candidates is not None:
-        cand = candidates.select("lid", "rid").distinct().withColumn(
-            "_common", F.lit(None).cast("long")
-        )
-        df_cap = None  # external candidates: no co-occurrence counts
-    elif df_cap is None:
-        # AllPairs prefix filtering over the UNION-wide document-frequency
-        # order — recall-exact at any scale, same argument as the self-join
-        # (_prefix_candidate_stats); the theorem only needs ONE consistent
-        # global order across both corpora. k-extended prefixes + the
-        # shared-count floor kill the low-threshold singleton flood
-        # exactly as in the self-join (see _prefix_k).
-        t = threshold - 0.0005
-        k = _prefix_k(threshold)
-        allow = F.col("_hl") + F.col("_hr")  # outside either doc's prefix
-        sll = sl.select(
-            F.col(id_col).alias("lid"),
-            F.size("shingles").alias("_sz"),
-            F.explode("shingles").alias("shingle"),
-        )
-        srr = sr.select(
-            F.col(id_col).alias("rid"),
-            F.size("shingles").alias("_sz"),
-            F.explode("shingles").alias("shingle"),
-        )
-        # persisted: both corpora's prefix selections scan the union-wide
-        # frequency table — unpersisted it aggregates twice
-        dfreq = (
-            sll.select("shingle")
-            .unionAll(srr.select("shingle"))
-            .groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("_df"))
-            .persist()
-        )
-        prefix_caches = [dfreq]
-
-        def _prefix(sh: DataFrame, key: str, p: str, q: str) -> DataFrame:
-            order = Window.partitionBy(key).orderBy("_df", "shingle")
-            return (
-                sh.join(dfreq, "shingle")
-                .withColumn("_rn", F.row_number().over(order))
-                .filter(
-                    F.col("_rn")
-                    <= _prefix_len(F.col("_sz"), t) + F.lit(k - 1)
-                )
-                .filter(F.col("_df") >= 2)  # union-df 1 cannot collide
-                .select(
-                    key, "shingle",
-                    F.col("_rn").alias(p), F.col("_sz").alias(q),
-                )
-            )
-
-        joined_lr = (
-            _prefix(sll, "lid", "_pl", "_ql")
-            .join(_prefix(srr, "rid", "_pr", "_qr"), "shingle")
-            .filter(
-                F.least("_ql", "_qr") >= F.lit(t) * F.greatest("_ql", "_qr")
-            )
-        )
-        if k == 1:
-            # same per-row PPJoin positional pruning as the self-join
-            # (_prefix_candidate_stats) — exactness argument identical,
-            # and equally k=1-only
-            alpha = F.lit(t) * (F.col("_ql") + F.col("_qr")) / F.lit(1.0 + t)
-            cand = (
-                joined_lr.filter(
-                    1 + F.least(F.col("_ql") - F.col("_pl"),
-                                F.col("_qr") - F.col("_pr")) >= alpha
-                )
-                .groupBy("lid", "rid")
-                .agg(F.count(F.lit(1)).alias("_common"))
-            )
-        else:
-            cand = (
-                joined_lr.groupBy("lid", "rid")
-                .agg(
-                    F.count(F.lit(1)).alias("_common"),
-                    F.min("_ql").alias("_ql"),
-                    F.min("_qr").alias("_qr"),
-                )
-                .filter(
-                    F.col("_common")
-                    >= F.least(
-                        F.lit(k),
-                        F.ceil(F.lit(t) * F.least("_ql", "_qr")),
-                    )
-                )
-                .select("lid", "rid", "_common")
-            )
-        # non-posted count per doc is closed-form: max(ceil(t*sz) - k, 0)
-        prefix_hot = (
-            sl.select(
-                F.col(id_col).alias("lid"),
-                F.greatest(
-                    F.ceil(F.lit(t) * F.size("shingles")) - k, F.lit(0)
-                )
-                .cast("long")
-                .alias("_hl"),
-            ),
-            sr.select(
-                F.col(id_col).alias("rid"),
-                F.greatest(
-                    F.ceil(F.lit(t) * F.size("shingles")) - k, F.lit(0)
-                )
-                .cast("long")
-                .alias("_hr"),
-            ),
-        )
-    if df_cap is not None:
-        # persisted: four consumers (two anti-joins, two hot-count joins)
-        # would otherwise each recompute the union-wide frequency agg
-        hot = (
-            shl.select("shingle")
-            .unionAll(shr.select("shingle"))
-            .groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") > df_cap)
-            .select("shingle")
-            .persist()
-        )
-        coldl = shl.join(hot, "shingle", "left_anti")
-        coldr = shr.join(hot, "shingle", "left_anti")
-        hotl = shl.join(hot, "shingle").groupBy("lid").agg(
-            F.count(F.lit(1)).alias("_hl")
-        )
-        hotr = shr.join(hot, "shingle").groupBy("rid").agg(
-            F.count(F.lit(1)).alias("_hr")
-        )
-        cand = coldl.join(coldr, "shingle").groupBy("lid", "rid").agg(
-            F.count(F.lit(1)).alias("_common")
-        )
-    elif prefix_hot is not None:
-        hotl, hotr = prefix_hot  # closed-form; cand set by the prefix path
+    sets = tuple(
+        shingle_sets(s, id_col, text_col, n).persist() for s in (left, right)
+    )
+    if candidates is None:
+        cand, stats, caches = _prefix_candidates(sets, id_col, threshold)
     else:
-        hotl = shl.select("lid").limit(0).withColumn("_hl", F.lit(0))
-        hotr = shr.select("rid").limit(0).withColumn("_hr", F.lit(0))
-    statl = (
-        sl.select(F.col(id_col).alias("lid"), F.size("shingles").alias("_szl"))
-        .join(hotl, "lid", "left")
-        .select("lid", "_szl", F.coalesce("_hl", F.lit(0)).alias("_hl"))
+        cand = candidates.select(
+            F.col("lid").alias("ida"), F.col("rid").alias("idb")
+        ).distinct()
+        stats, caches = None, []
+    out = _prune_verify(cand, sets, id_col, threshold, stats).select(
+        F.col("ida").alias("lid"), F.col("idb").alias("rid"), "jac"
     )
-    statr = (
-        sr.select(F.col(id_col).alias("rid"), F.size("shingles").alias("_szr"))
-        .join(hotr, "rid", "left")
-        .select("rid", "_szr", F.coalesce("_hr", F.lit(0)).alias("_hr"))
+    return _attach_caches(
+        out,
+        *([candidates] if candidates is not None else []),
+        extra=[*sets, *caches],
     )
-    thr = F.lit(threshold - 0.0005)  # same rounding slack as jaccard_pairs
-    cand = (
-        cand.join(statl, "lid")
-        .join(statr, "rid")
-        .filter(F.least("_szl", "_szr") >= thr * F.greatest("_szl", "_szr"))
-        # null _common (external candidate sets) passes through; the
-        # allowance is min(hot) for df_cap vs sum(non-posted) for prefix
-        .filter(
-            F.coalesce(
-                (F.col("_common") + allow)
-                >= thr * F.greatest("_szl", "_szr"),
-                F.lit(True),
-            )
-        )
-        .select("lid", "rid")
-    )
-    sa = sl.select(F.col(id_col).alias("lid"), F.col("shingles").alias("_sa"))
-    sb = sr.select(F.col(id_col).alias("rid"), F.col("shingles").alias("_sb"))
-    inter = F.size(F.array_intersect(F.col("_sa"), F.col("_sb")))
-    jac = inter / (F.size("_sa") + F.size("_sb") - inter)
-    out = (
-        cand.join(sa, "lid")
-        .join(sb, "rid")
-        .select("lid", "rid", pround(jac, 3).alias("jac"))
-        .filter(F.col("jac") >= threshold)
-    )
-    extra = [sl, sr] + ([hot] if df_cap is not None else []) + prefix_caches
-    return _attach_caches(out, extra=extra)
 
 
 # --------------------------------------------------------------------------

@@ -456,125 +456,25 @@ def url_dedup(
     return keyed.join(keep, [id_col, "_curl"], "left_semi").drop("_curl")
 
 
-# single-scan regime cutover for domain_overlap: estimated input bytes
-# above which the one-tokenize collect_set shape replaces the redundant
-# multi-scan shape. Measured r16 (see OPTIMIZATION_r16.md): the multi-scan
-# shape wins at sf0.1/sf1/sf3 (0.6-18 MB inputs — scans are cheap and
-# fully parallel; the ObjectHashAggregate(collect_set) + persist
-# serializes the hot path), and its disadvantage SHRINKS as scans grow.
-# The crossover was not reached at any locally testable size, so the
-# cutover sits above the sf3 fixture by an order of magnitude; at true
-# corpus scale (where 4 redundant corpus scans dominate everything else)
-# the single-scan regime takes over. Override per call via single_scan=.
-DOMAIN_OVERLAP_SINGLE_SCAN_BYTES = 512 * 1024 * 1024
-
-
-def _estimated_input_bytes(df: DataFrame) -> int:
-    """Catalyst's estimate of the plan's input size (file bytes for a
-    parquet scan) — the routing signal for scan-count-sensitive regimes.
-    Falls back to 0 (= small) when the estimate is unavailable."""
-    try:
-        return int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:
-        return 0
-
-
 def domain_overlap(
     df: DataFrame,
     by: str = "source",
     text_col: str = "text",
-    single_scan: "bool | None" = None,
 ) -> DataFrame:
     """Pairwise vocabulary Jaccard between domains: (src_a, src_b, jac) for
     every unordered domain pair — the corpus-analysis step behind mixing
     decisions ("how redundant are these two sources?").
 
-    Two physical regimes, same exact values (size-routed on the input's
-    estimated bytes, ``single_scan`` forces one for A/B):
-
-    - multi-scan (small inputs): one tokenize + distinct pass defines the
-      (domain, token) vocabulary; pair intersections come from a
-      self-equi-join ON TOKEN (at most |domains|^2 rows per token group —
-      skew-free for a handful of domains) and union sizes from per-domain
-      counts. The vocabulary subtree executes for the sizes aggregate and
-      both join sides, so the corpus is scanned 4x — cheap and fully
-      parallel below the cutover (measured faster at every local SF, r15
-      + r16 A/Bs).
-    - single-scan (large inputs): ONE tokenize pass into
-      groupBy(token).collect_set(domain) (persisted); pair intersections
-      explode from the sorted per-token domain set in-task and sizes
-      re-derive from the same frame — 4 corpus scans -> 1, 12 Exchanges
-      -> ~6. The redundant-scan cost grows linearly with corpus size
-      while the pair/size metadata does not, so past the cutover this is
-      the 100 TB shape (guide §2.4).
+    One tokenize + distinct pass defines the (domain, token) vocabulary;
+    pair intersections come from a self-equi-join ON TOKEN (at most
+    |domains|^2 rows per token group — skew-free for a handful of domains)
+    and union sizes from per-domain counts. The vocabulary subtree executes
+    for the sizes aggregate and both join sides, so the corpus is scanned
+    4x — cheap and fully parallel; a one-scan collect_set shape measured
+    slower at sf0.1, sf1 and sf3 (OPTIMIZATION_r16.md).
 
     Values are exact; jac rounds to 4 for cross-engine comparison.
     """
-    if single_scan is None:
-        single_scan = (
-            _estimated_input_bytes(df) >= DOMAIN_OVERLAP_SINGLE_SCAN_BYTES
-        )
-    if single_scan:
-        from fireworks_spark.operators.dedup import keep_caches
-
-        toksets = (
-            spread(df)
-            .select(
-                F.col(by).alias("_d"), F.explode(words(text_col)).alias("_t")
-            )
-            .filter(F.col("_t") != "")
-            .groupBy("_t")
-            .agg(F.array_sort(F.collect_set("_d")).alias("_ds"))
-            .persist()
-        )
-        sizes = (
-            toksets.select(F.explode("_ds").alias("_d"))
-            .groupBy("_d")
-            .agg(F.count(F.lit(1)).alias("_sz"))
-        )
-        # all unordered pairs from the sorted per-token domain set,
-        # expanded in-task: element i pairs with every later element
-        pair_expr = (
-            "flatten(transform(_ds, (x, i) -> "
-            "transform(slice(_ds, i + 2, size(_ds) - i - 1), "
-            "y -> struct(x AS src_a, y AS src_b))))"
-        )
-        inter = (
-            toksets.filter(F.size("_ds") >= 2)
-            .select(F.explode(F.expr(pair_expr)).alias("_p"))
-            .select("_p.src_a", "_p.src_b")
-            .groupBy("src_a", "src_b")
-            .agg(F.count(F.lit(1)).alias("_c"))
-        )
-        out = (
-            inter.join(
-                F.broadcast(
-                    sizes.select(
-                        F.col("_d").alias("src_a"), F.col("_sz").alias("_sa")
-                    )
-                ),
-                "src_a",
-            )
-            .join(
-                F.broadcast(
-                    sizes.select(
-                        F.col("_d").alias("src_b"), F.col("_sz").alias("_sb")
-                    )
-                ),
-                "src_b",
-            )
-            .select(
-                "src_a",
-                "src_b",
-                pround(
-                    F.col("_c") / (F.col("_sa") + F.col("_sb") - F.col("_c")),
-                    4,
-                ).alias("jac"),
-            )
-        )
-        return keep_caches(out, extra=[toksets])
     vocab = (
         spread(df)
         .select(F.col(by).alias("_d"), F.explode(words(text_col)).alias("_t"))

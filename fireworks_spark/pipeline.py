@@ -412,8 +412,9 @@ class Pipe:
     ) -> "Pipe":
         """Cross-corpus near-dup join at a Jaccard threshold: banded
         MinHash candidates + exact verify (dedup.minhash_join) by
-        default; ``exact=True`` switches to the df-capped shingle
-        candidate join (dedup.jaccard_join) for verification-grade runs."""
+        default; ``exact=True`` switches to the prefix-filtered shingle
+        candidate join (dedup.jaccard_join, recall-exact at any scale) for
+        verification-grade runs."""
         from fireworks_spark.operators import dedup as dd
 
         rhs = other.df if isinstance(other, Pipe) else other

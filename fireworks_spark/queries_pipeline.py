@@ -80,10 +80,10 @@ def q30_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q31_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact Jaccard pairs via AllPairs prefix-filtered candidates —
-    recall-exact at ANY corpus scale. The earlier df_cap=64 heuristic was
-    scale-dependent: shingle document frequencies grow with the corpus, and
-    at sf1 (50k docs) real near-dup pairs share only shingles hotter than
-    the cap, silently losing pairs (caught by the round-9 sf1 sweep)."""
+    recall-exact at ANY corpus scale. A global document-frequency cap on
+    candidate shingles is scale-dependent: frequencies grow with the
+    corpus, and at sf1 (50k docs) real near-dup pairs share only shingles
+    hotter than any cap tuned small, silently losing pairs (SCALE.md)."""
     d = table(spark, sf_dir, "documents")
     out = dedup.jaccard_pairs(d, threshold=0.5)
     return dedup.keep_caches(out.orderBy("ida", "idb"), out)

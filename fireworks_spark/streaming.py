@@ -19,8 +19,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from fireworks_spark.functions.rounding import pround
 from pyspark.sql.types import (
     DoubleType,
     LongType,
@@ -637,8 +635,9 @@ def dedup_stream_against(
     banded MinHash table is the signature store, its hashed-shingle sets
     the verify store. Per batch the work is batch-sized: row-wise batch
     signatures (no shuffle), an equi-join of batch bands against the
-    persisted corpus bands (groups = band buckets, never all-pairs), an
-    array_intersect verify on collisions only, one anti-join. Engine
+    persisted corpus bands (groups = band buckets, never all-pairs), the
+    batch path's exact verify and threshold rule (dedup._prune_verify) on
+    collisions only, one anti-join. Engine
     state is zero — exactness against the corpus needs no watermark; for
     WITHIN-stream dedup compose with near_dedup_stream upstream.
     """
@@ -654,16 +653,11 @@ def dedup_stream_against(
             num_hashes,
             rows_per_band,
         )
-        .select(F.col(id_col).alias("rid"), "band_idx", "band_key")
+        .select(F.col(id_col).alias("idb"), "band_idx", "band_key")
         .persist()
     )
-    csets = corpus_sets.select(
-        F.col(id_col).alias("rid"), F.col("shingles").alias("_sb")
-    )
-    thr = F.lit(threshold - 0.0005)  # jac rounds to 3 decimals in the join
 
     def fb(batch: DataFrame, batch_id: int) -> None:
-        bsets = dd.shingle_sets(batch, id_col, text_col, n)
         bbands = dd.lsh_bands(
             dd.minhash_signatures_rowwise(
                 batch, id_col, text_col, num_hashes, n
@@ -671,25 +665,16 @@ def dedup_stream_against(
             id_col,
             num_hashes,
             rows_per_band,
-        ).select(F.col(id_col).alias("lid"), "band_idx", "band_key")
+        ).select(F.col(id_col).alias("ida"), "band_idx", "band_key")
         cand = (
             bbands.join(corpus_bands, ["band_idx", "band_key"])
-            .select("lid", "rid")
+            .select("ida", "idb")
             .distinct()
         )
-        inter = F.size(F.array_intersect("_sa", "_sb"))
-        jac = inter / (F.size("_sa") + F.size("_sb") - inter)
+        bsets = dd.shingle_sets(batch, id_col, text_col, n)
         tainted = (
-            cand.join(
-                bsets.select(
-                    F.col(id_col).alias("lid"),
-                    F.col("shingles").alias("_sa"),
-                ),
-                "lid",
-            )
-            .join(csets, "rid")
-            .filter(pround(jac, 3) >= thr)
-            .select(F.col("lid").alias(id_col))
+            dd._prune_verify(cand, (bsets, corpus_sets), id_col, threshold)
+            .select(F.col("ida").alias(id_col))
             .distinct()
         )
         batch.join(tainted, id_col, "left_anti").write.mode(

@@ -46,16 +46,6 @@ def test_jaccard_pairs_exact_values(docs):
     assert (0, 2) not in got
 
 
-def test_jaccard_df_cap_drops_only_candidates_not_values(docs):
-    # cap=1 removes every shared shingle from candidate generation,
-    # so no pairs survive; values themselves are never approximated
-    assert dedup.jaccard_pairs(docs, threshold=0.1, df_cap=1).count() == 0
-    # cap large enough: same result as uncapped
-    a = sorted(map(tuple, dedup.jaccard_pairs(docs, 0.1).collect()))
-    b = sorted(map(tuple, dedup.jaccard_pairs(docs, 0.1, df_cap=100).collect()))
-    assert a == b
-
-
 def test_blocked_hamming_matches_bruteforce(spark):
     # Wide radius on a short signature (8 of 24 -> 2/3-bit band keys)
     # routes to the blocked all-pairs popcount; verify the full pair set
@@ -135,9 +125,6 @@ def test_prefix_candidates_survive_corpus_wide_boilerplate(spark):
     got = {(r.ida, r.idb): r.jac for r in
            dedup.jaccard_pairs(df, threshold=0.9).collect()}
     assert got == {(100, 101): 1.0}
-    # the legacy capped path drops all-hot pairs — kept only as an
-    # explicitly requested recall-trading knob
-    assert dedup.jaccard_pairs(df, threshold=0.9, df_cap=64).count() == 0
     # cross-corpus face, same guarantee (union-wide frequency order)
     joined = {(r.lid, r.rid): r.jac for r in dedup.jaccard_join(
         df.filter(F.col("doc_id") % 2 == 0),
@@ -664,7 +651,7 @@ def test_dedup_queries_release_their_caches(spark, sf_dir):
     baseline = persistent_rdds()
 
     for build in (
-        lambda: jaccard_pairs(docs, threshold=0.8, df_cap=20),
+        lambda: jaccard_pairs(docs, threshold=0.8),
         lambda: minhash_dedup_pairs(docs, threshold=0.8),
         lambda: keep_canonical(docs, minhash_dedup_pairs(docs, threshold=0.8)),
         lambda: leakage_safe_split(
@@ -705,8 +692,10 @@ def test_jaccard_join_caches_released(spark):
     left = spark.createDataFrame([(0, "a b c d e")], ["doc_id", "text"])
     right = spark.createDataFrame([(1, "a b c d f")], ["doc_id", "text"])
     baseline = set(dict(spark.sparkContext._jsc.getPersistentRDDs()))
-    # df_cap path also persists the union hot-shingle table; both must free
-    for kw in ({}, {"df_cap": 8}):
+    # the prefix path also persists the union-wide frequency table; the
+    # external-candidate path persists only the two shingle-set frames
+    cand = spark.createDataFrame([(0, 1)], "lid long, rid long")
+    for kw in ({}, {"candidates": cand}):
         out = dedup.jaccard_join(left, right, threshold=0.1, **kw)
         out.collect()
         dedup.release_caches(out)
@@ -757,31 +746,18 @@ def test_quadratic_guard_warns_past_budget(spark, monkeypatch):
         [(i, [float(i), 1.0]) for i in range(20)],
         "vec_id long, embedding array<double>",
     )
-    docs = spark.createDataFrame(
-        [(i, f"shared tokens everywhere plus unique{i}") for i in range(12)],
-        ["doc_id", "text"],
-    )
 
     monkeypatch.setattr(dedup, "QUADRATIC_COMPARE_BUDGET", 0)
     with pytest.warns(UserWarning, match="band keyspace"):
         dedup.hamming_pairs(sigs, 8, num_bits=24)  # blocked route sizes eagerly
     with pytest.warns(UserWarning, match="sign-LSH"):
         dedup.blocked_cosine_pairs(vecs, 0.5)
-    with pytest.warns(UserWarning, match="minhash_dedup_pairs"):
-        dedup.jaccard_pairs(docs, 0.3, size_check=True)
 
     monkeypatch.setattr(dedup, "QUADRATIC_COMPARE_BUDGET", 5_000_000_000)
     with warnings.catch_warnings():
         warnings.simplefilter("error")
         dedup.hamming_pairs(sigs, 8, num_bits=24)
         dedup.blocked_cosine_pairs(vecs, 0.5)
-        # size_check on, under budget: probe runs, stays silent, and the
-        # result is unchanged vs the probe-free call
-        a = sorted(map(tuple, dedup.jaccard_pairs(docs, 0.3).collect()))
-    b = sorted(
-        map(tuple, dedup.jaccard_pairs(docs, 0.3, size_check=True).collect())
-    )
-    assert a == b
 
 
 def test_hamming_routing_skew_aware(spark, monkeypatch):
@@ -853,8 +829,8 @@ def test_extended_prefix_k_equivalence(spark):
     for thr in (0.3, 0.5):
         base = None
         for k in (1, 2, 4, 6):
-            cand, stats, caches = dedup._prefix_candidate_stats(
-                dedup.shingle_sets(df, "doc_id", "text", 3), "doc_id",
+            cand, stats, caches = dedup._prefix_candidates(
+                (dedup.shingle_sets(df, "doc_id", "text", 3),), "doc_id",
                 thr, k=k,
             )
             # feed each k's candidate core through the shared verify:
@@ -902,19 +878,28 @@ def test_prefix_common_counts_all_collisions(spark):
             + [401, 402, 403, 404, 405, 406]),
     ]
     sets = spark.createDataFrame(rows, "doc_id long, shingles array<long>")
-    cand, stats, caches = dedup._prefix_candidate_stats(
-        sets, "doc_id", 0.7, k=1
+    # the same rows as one corpus (self-join) and split into two corpora
+    # (cross-join: even ids left, odd right) — the pairs above all cross
+    # the split, and both faces must count _common exactly
+    split = (
+        sets.filter(F.col("doc_id") % 2 == 0),
+        sets.filter(F.col("doc_id") % 2 == 1),
     )
-    got = {(r.ida, r.idb): r._common for r in cand.collect()}
-    # exact both-prefix intersection count (4), not the positional-
-    # survivor count (2); the late-collision-only false pair is pruned
-    assert got == {(0, 1): 4}
-    hot = {r._id: r._hot for r in stats.collect()}
-    # the documented bound |A∩B| <= _common + _hotA + _hotB is exact and
-    # can be tightened freely: 10 shared <= 4 + 6 + 6
-    assert 10 <= got[(0, 1)] + hot[0] + hot[1]
-    for c in caches:
-        c.unpersist()
+    for inputs in ((sets,), split):
+        cand, (sta, stb), caches = dedup._prefix_candidates(
+            inputs, "doc_id", 0.7, k=1
+        )
+        got = {(r.ida, r.idb): r._common for r in cand.collect()}
+        # exact both-prefix intersection count (4), not the positional-
+        # survivor count (2); the late-collision-only false pair is pruned
+        assert got == {(0, 1): 4}, len(inputs)
+        hot_a = {r._id: r._hot for r in sta.collect()}
+        hot_b = {r._id: r._hot for r in stb.collect()}
+        # the documented bound |A∩B| <= _common + _hotA + _hotB is exact
+        # and can be tightened freely: 10 shared <= 4 + 6 + 6
+        assert 10 <= got[(0, 1)] + hot_a[0] + hot_b[1]
+        for c in caches:
+            c.unpersist()
 
 
 def test_hamming_routing_probe_memoized(spark):

@@ -458,6 +458,29 @@ def test_dedup_stream_against_static_corpus(spark, tmp_path):
     # (baseline-relative: other module tests may hold their own caches)
 
 
+def test_dedup_stream_against_threshold_rule_matches_batch(spark, tmp_path):
+    """The stream drops a doc by the batch rule, pround(jac, 3) >=
+    threshold: a Jaccard-0.75 pair sits below threshold 0.7504, so the
+    batch join reports no pair and the stream must keep the doc."""
+    from fireworks_spark.operators import dedup
+
+    corpus = spark.createDataFrame(
+        [(100, "the quick brown fox jumps over the lazy dog")],
+        "doc_id long, text string",
+    )
+    docs = spark.createDataFrame(
+        [(1, "the quick brown fox jumps over the lazy cat")],
+        "doc_id long, text string",
+    )
+    assert dedup.minhash_join(docs, corpus, threshold=0.7504).count() == 0
+    src = str(tmp_path / "thr_src")
+    docs.coalesce(1).write.parquet(src)
+    stream = spark.readStream.schema(docs.schema).parquet(src)
+    out = str(tmp_path / "thr_out")
+    streaming.dedup_stream_against(stream, corpus, out, threshold=0.7504)
+    assert [r.doc_id for r in spark.read.parquet(out).collect()] == [1]
+
+
 def test_quality_gates_run_on_streams(spark, tmp_path):
     """The expression-only quality operators (gopher_stats, c4_line_filter,
     ngram_repetition) must work unchanged inside a readStream pipeline

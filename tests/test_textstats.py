@@ -194,24 +194,6 @@ def test_domain_overlap_exact_jaccard(spark):
     assert ("a", "c") not in got and ("b", "c") not in got  # no shared tokens
 
 
-def test_domain_overlap_regimes_agree(spark, sf_dir):
-    """The size-routed single-scan regime (one tokenize pass +
-    collect_set, pairs exploded in-task) must return exactly the
-    multi-scan regime's rows on the real documents fixture."""
-    from fireworks_spark.operators.dedup import release_caches
-    from fireworks_spark.tables import table
-
-    d = table(spark, sf_dir, "documents")
-    multi = {
-        (r.src_a, r.src_b): r.jac
-        for r in textstats.domain_overlap(d, single_scan=False).collect()
-    }
-    single_df = textstats.domain_overlap(d, single_scan=True)
-    single = {(r.src_a, r.src_b): r.jac for r in single_df.collect()}
-    release_caches(single_df)
-    assert multi == single and len(multi) > 0
-
-
 def test_gopher_stats_closed_form(spark):
     """Hand-computed Gopher rule values on structured fixtures: word
     stats, symbol ratio, stop-word hits, bullet/ellipsis lines, duplicate
